@@ -247,3 +247,39 @@ def test_bronze_write_failure_advances_nothing(spark, tmp_path):
 
     s3 = pipe.run_once(["m1", "m2"])  # converged
     assert {v["action"] for v in s3.values()} == {"skip"}
+
+
+def test_crash_inside_gold_merge_replays_to_the_no_crash_gold(
+    spark, tmp_path, monkeypatch
+):
+    # at-least-once + idempotent-by-key across a crash between the gold
+    # swap's two renames: the watermark does not persist, the replay
+    # re-pulls, and gold must equal a run that never crashed (the old
+    # swap lost every media not in the replayed delta).
+    import pytest
+
+    from wistia_etl_pipeline_spark.operators import merge as M
+
+    def gold(root, crash):
+        pipe = _mk(spark, root, FakeWistia())
+        pipe.gold_exact = True
+        pipe.run_once(["m1"])
+        if crash:
+            real = M._rename
+
+            def rename(fs, src, dst):
+                if str(src).endswith("gold__tmp_merge"):
+                    raise RuntimeError("injected crash in the gold merge")
+                real(fs, src, dst)
+
+            monkeypatch.setattr(M, "_rename", rename)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                pipe.run_once(["m1", "m2"])
+            monkeypatch.setattr(M, "_rename", real)
+            assert not (root / "gold").exists()
+        pipe.run_once(["m1", "m2"])
+        return sorted(map(tuple, spark.read.parquet(str(root / "gold")).collect()))
+
+    clean = gold(tmp_path / "clean", crash=False)
+    assert {r[0] for r in clean} == {"m1", "m2"}
+    assert gold(tmp_path / "crash", crash=True) == clean

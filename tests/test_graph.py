@@ -308,26 +308,44 @@ def test_kcore_raises_when_bound_too_small(spark):
         kcore_peel(df, k=2, max_rounds=0, src="a_id", dst="b_id")
 
 
-def test_kcore_restores_shuffle_partitions_conf(spark):
-    # the frontier-sized ladder mutates spark.sql.shuffle.partitions
-    # under try/finally — both the success and the raise path must
-    # leave the session conf exactly as found.
+def test_graph_operators_never_write_shuffle_partitions(spark, monkeypatch):
+    # batch graph plans take per-plan width hints; the session conf is
+    # written only by session.scoped_shuffle_partitions, so CC, LPA and
+    # kcore can share one session across threads. Spy on every conf
+    # write over their success paths and kcore's raise path.
     import pytest
+    from pyspark.sql.conf import RuntimeConfig
 
-    from wistia_etl_pipeline_spark.functions.graph import kcore_peel
-
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    tri = spark.createDataFrame(
-        [(0, 1), (1, 2), (0, 2)], "a_id long, b_id long"
+    from wistia_etl_pipeline_spark.functions.graph import (
+        kcore_peel,
+        label_propagation,
     )
+    from wistia_etl_pipeline_spark.session import scoped_shuffle_partitions
+
+    writes: list[str] = []
+    real = RuntimeConfig.set
+
+    def spy(self, key, value):
+        writes.append(key)
+        return real(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    tri = spark.createDataFrame(
+        [(0, 1), (1, 2), (0, 2), (3, 4)], "a_id long, b_id long"
+    )
+    connected_components(tri, "a_id", "b_id").collect()
+    label_propagation(tri, rounds=2, src="a_id", dst="b_id").collect()
     kcore_peel(tri, k=2, src="a_id", dst="b_id").collect()
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(7)], "a_id long, b_id long"
     )
     with pytest.raises(RuntimeError):
         kcore_peel(path, k=2, max_rounds=2, src="a_id", dst="b_id")
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert "spark.sql.shuffle.partitions" not in writes
+    # the spy does see a shuffle-partition write when one happens
+    with scoped_shuffle_partitions(spark, 8):
+        pass
+    assert "spark.sql.shuffle.partitions" in writes
 
 
 # ---------------------------------------------------------------------------

@@ -777,3 +777,27 @@ def test_sql_udf_table_lateral_is_plain_generate(spark, sf_dir):
     assert "Generate explode" in plan, plan
     assert "BatchEvalPython" not in plan and "PythonUDTF" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_apply_runtime_confs_raises_when_utc_cannot_be_set(spark, monkeypatch):
+    # the UTC session timezone is an invariant, not a best-effort conf:
+    # a session that refuses it must fail loudly, while other
+    # non-modifiable confs stay best-effort
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.conf import RuntimeConfig
+
+    from wistia_etl_pipeline_spark.session import apply_runtime_confs
+
+    real = RuntimeConfig.set
+    refused = {"spark.sql.adaptive.enabled"}
+
+    def refusing(self, key, value):
+        if key in refused:
+            raise AnalysisException(f"cannot modify {key}")
+        return real(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", refusing)
+    apply_runtime_confs(spark)
+    refused.add("spark.sql.session.timeZone")
+    with pytest.raises(AnalysisException, match="timeZone"):
+        apply_runtime_confs(spark)

@@ -771,8 +771,8 @@ def test_stage_time_ordered_contract(spark, tmp_path):
 def test_stream_state_partitions_derivation(spark, tmp_path):
     """r13: the streaming state width derives from staged source bytes
     — floors at the static default for MB-scale inputs (bench SFs are
-    bit-identical to the r12 constant), scales with bytes above it,
-    honors the clamp, and the env override short-circuits everything."""
+    bit-identical to the r12 constant), scales with bytes above it, and
+    honors the clamp."""
     import os
 
     from wistia_etl_pipeline_spark import session as S
@@ -811,20 +811,86 @@ def test_stream_state_partitions_derivation(spark, tmp_path):
     finally:
         S.STREAM_STATE_BYTES_PER_PARTITION = old
 
-    # the env override wins over any derivation
-    os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"] = "77"
-    try:
-        # module-level default is read at import time; the override
-        # path returns it via the env short-circuit
-        assert (
-            S.stream_state_partitions(spark, src)
-            == S.STREAM_SHUFFLE_PARTITIONS
-        )
-    finally:
-        del os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"]
-
     # scoped_shuffle_partitions(source=...) applies the derived width
     with S.scoped_shuffle_partitions(spark, source=src):
         assert spark.conf.get("spark.sql.shuffle.partitions") == str(
             S.STREAM_SHUFFLE_PARTITIONS
         )
+
+
+def test_stream_state_partitions_unknown_size_keeps_floor(spark):
+    # an RDD-backed source has no size statistics: its plan reports
+    # spark.sql.defaultSizeInBytes, which must read as "unknown" (the
+    # floor), not as an enormous input (the 2048 clamp)
+    from wistia_etl_pipeline_spark import session as S
+
+    rdd_src = spark.createDataFrame(
+        spark.sparkContext.parallelize([(i,) for i in range(1000)]), "id long"
+    )
+    floor = S.STREAM_SHUFFLE_PARTITIONS
+    assert S.stream_state_partitions(spark, rdd_src) == floor
+    # a localCheckpoint keeps its origin plan's statistics on Spark 4
+    assert S.stream_state_partitions(spark, spark.range(1000).localCheckpoint()) == floor
+
+
+def _run_threads(target, n: int) -> None:
+    import threading
+
+    threads = [threading.Thread(target=target) for _ in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+        assert not t.is_alive()
+
+
+def test_shuffle_scope_refuses_a_second_thread(spark):
+    import sys
+    import threading
+
+    from wistia_etl_pipeline_spark import session as S
+
+    errors: list[RuntimeError] = []
+
+    def enter() -> None:
+        try:
+            with S.scoped_shuffle_partitions(spark, 5):
+                pass
+        except RuntimeError as exc:
+            errors.append(exc)
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with S.scoped_shuffle_partitions(spark, 8):
+        _run_threads(enter, 1)
+        assert len(errors) == 1
+        # the refused entry did not touch the scoped value
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    _run_threads(enter, 1)  # released on exit: the next entry succeeds
+    assert len(errors) == 1
+
+    # more threads than cores race for the scope: never two inside at
+    # once, and the session value is restored when all have left
+    guard = threading.Lock()
+    inside, peak = [0], [0]
+
+    def race() -> None:
+        for _ in range(10):
+            try:
+                with S.scoped_shuffle_partitions(spark, 3):
+                    with guard:
+                        inside[0] += 1
+                        peak[0] = max(peak[0], inside[0])
+                    with guard:
+                        inside[0] -= 1
+            except RuntimeError:
+                pass
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        _run_threads(race, 16)
+    finally:
+        sys.setswitchinterval(interval)
+    assert peak[0] == 1
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before

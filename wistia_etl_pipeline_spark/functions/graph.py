@@ -32,6 +32,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
+#: Edge count at or below which an iterative graph plan's per-round
+#: shuffles run at 8 partitions: 16 B/edge × 5 M = ~80 MB, ~10 MB per
+#: reduce task — coordination-bound, not data-bound, at any wider
+#: fan-out. Larger frontiers keep the session partitioning (+ AQE
+#: coalescing).
+_SMALL_FRONTIER = 5_000_000
+
+
+def _frontier_width(n_edges: int) -> int | None:
+    """The graph operators' one width rule, applied per plan by
+    :func:`_hint` (never via session conf, so operators can share a
+    session across threads): 8 up to ``_SMALL_FRONTIER`` edges, else
+    ``None`` (session width)."""
+    return 8 if n_edges <= _SMALL_FRONTIER else None
+
+
+def _hint(df: DataFrame, w: int | None, *cols: str) -> DataFrame:
+    """Hash-partition ``df`` by ``cols`` into ``w`` partitions when a
+    width is given; a window, aggregate or join on those keys reuses
+    it. REBALANCE, unlike ``repartition(w, …)``, lets AQE coalesce a
+    tiny frontier's partitions, as it does a conf-width exchange."""
+    return df.hint("rebalance", w, *cols) if w else df
+
+
 def _symmetric(edges: DataFrame) -> DataFrame:
     """Both directions of each edge, self-loops dropped."""
     fwd = edges.select("src", "dst")
@@ -49,13 +73,10 @@ def _large_star(nbr: DataFrame, w: int | None = None) -> DataFrame:
     in small-star's round-final distinct, so per round only ONE dedup
     exchange remains (r4 round-overhead work, VERDICT r3 #4).
 
-    ``w`` is the per-plan width hint (r13): an explicit ``repartition``
-    whose hash(src) partitioning the window reuses, so small frontiers
-    run their one exchange at ``w`` partitions without touching the
-    session conf (thread-safe — the τ-sensitivity query runs three
-    closures concurrently)."""
-    if w:
-        nbr = nbr.repartition(w, F.col("src"))
+    ``w`` is the per-plan width (:func:`_frontier_width`): the window
+    reuses the hinted hash(src) partitioning, so small frontiers run
+    their one exchange at ``w`` partitions."""
+    nbr = _hint(nbr, w, "src")
     m = F.least(F.min("dst").over(Window.partitionBy("src")), F.col("src"))
     return (
         nbr.withColumn("m", m)
@@ -73,16 +94,12 @@ def _small_star(nbr: DataFrame, w: int | None = None) -> DataFrame:
     rounds — Kiveris et al. §3). ``w`` as in :func:`_large_star` (the
     union ahead of the distinct destroys the window's partitioning, so
     the dedup exchange gets its own width hint)."""
-    small = nbr.where(F.col("dst") <= F.col("src"))
-    if w:
-        small = small.repartition(w, F.col("src"))
+    small = _hint(nbr.where(F.col("dst") <= F.col("src")), w, "src")
     with_m = small.withColumn("m", F.min("dst").over(Window.partitionBy("src")))
     moved = with_m.select(F.col("dst").alias("src"), F.col("m").alias("dst"))
     center = with_m.select("src", F.col("m").alias("dst"))
     out = moved.unionByName(center).where(F.col("src") != F.col("dst"))
-    if w:
-        out = out.repartition(w, F.col("src"), F.col("dst"))
-    return out.distinct()
+    return _hint(out, w, "src", "dst").distinct()
 
 
 def connected_components(
@@ -141,18 +158,9 @@ def connected_components(
     cur = _symmetric(raw).distinct().localCheckpoint(eager=False)
     cur_sig = _materialize(cur)
 
-    # Every round's star shuffles run inside this loop, so the
-    # kcore_peel small-frontier rule applies (r12): below
-    # _SMALL_FRONTIER edges the per-round exchanges are
-    # coordination-bound at the session's partitioning — run them at 8
-    # partitions. Width is a PER-PLAN repartition hint (r13), not a
-    # session-conf scope: the star windows and the round-final distinct
-    # reuse the explicit hash partitioning, exchange-for-exchange the
-    # same plan as the old conf scope, but with no session-global
-    # mutation — which is what lets the τ-sensitivity query run its
-    # three closures as concurrent jobs on one session. Larger graphs
-    # pass w=None and keep session width + AQE coalescing.
-    w = 8 if cur_sig[0] <= _SMALL_FRONTIER else None
+    # Every round's star shuffles run inside this loop: width them by
+    # the small-frontier rule (per-plan hints, no session conf).
+    w = _frontier_width(cur_sig[0])
     for _ in range(max_iter):
         nxt = _small_star(
             _symmetric(_large_star(_symmetric(cur), w)), w
@@ -379,12 +387,6 @@ def triangle_stats(pairs: DataFrame, a_col: str = "a_id", b_col: str = "b_id") -
     )
 
 
-#: Edge count below which kcore_peel's per-round shuffles run at 8
-#: partitions: 16 B/edge × 5 M = ~80 MB, ~10 MB per reduce task —
-#: coordination-bound, not data-bound, at any wider fan-out. Larger
-#: frontiers keep the session partitioning (+ AQE coalescing).
-_SMALL_FRONTIER = 5_000_000
-
 #: Edge count below which label_propagation broadcasts the per-round
 #: label frame into the vote join. Nodes ≤ 2×edges, so 500k edges
 #: bounds the broadcast at ~1M (node, label) long pairs ≈ tens of MB
@@ -450,9 +452,8 @@ def kcore_peel(
       spends more on task/stage coordination than on the data — the
       measured ratio on a 12 k-edge graph was 2.5 s vs 1.5 s), above
       it the session's partitioning and AQE coalescing govern as
-      usual. The conf is scoped with try/finally (the engine runs
-      queries sequentially per session; same discipline as the
-      state-store audits).
+      usual. The width is a per-plan hint (:func:`_frontier_width`),
+      so the session conf is never touched.
     """
     if max_rounds < 1:
         raise ValueError(f"kcore_peel: max_rounds must be >= 1, got {max_rounds}")
@@ -472,71 +473,63 @@ def kcore_peel(
         .localCheckpoint(eager=False)
     )
     sym = _symmetric(base).distinct().localCheckpoint(eager=True)
-    spark = sym.sparkSession
-    conf = spark.conf
-    small_frontier = sym.count() <= _SMALL_FRONTIER
-    prev_parts = conf.get("spark.sql.shuffle.partitions")
-    if small_frontier:
-        conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        nodes = sym.select(F.col("src").alias("node")).distinct()
-        keep_parts: list[DataFrame] = []
-        cur_edges = sym
-        for _ in range(max_rounds):
-            # Lazy checkpoint (r13, ADVICE r11 #3): each round's keep
-            # aggregate is consumed THREE times — both semi-join probes
-            # of the next edge restriction and the final kept_rounds
-            # union — and re-evaluated per consumer without a cut. One
-            # shared RDD = one evaluation. Below the small-frontier
-            # threshold the probes are additionally broadcast-hinted
-            # (an RDD-backed frame has no size statistics, so the
-            # planner would otherwise fall back to a shuffled join for
-            # a probe side we have just proven is node-sized).
-            keep = (
-                cur_edges.groupBy("src")
-                .agg(F.count(F.lit(1)).alias("d"))
-                .where(F.col("d") >= k)
-                .select(F.col("src").alias("node"))
-                .localCheckpoint(eager=False)
-            )
-            keep_parts.append(keep)
-            probe = F.broadcast(keep) if small_frontier else keep
-            cur_edges = (
-                cur_edges.join(probe, F.col("src") == F.col("node"), "left_semi")
-                .join(probe, F.col("dst") == F.col("node"), "left_semi")
-                .localCheckpoint(eager=False)
-            )
+    w = _frontier_width(sym.count())
+    nodes = _hint(sym.select(F.col("src").alias("node")), w, "node").distinct()
+    keep_parts: list[DataFrame] = []
+    cur_edges = sym
+    for _ in range(max_rounds):
+        # Lazy checkpoint (r13, ADVICE r11 #3): each round's keep
+        # aggregate is consumed THREE times — both semi-join probes of
+        # the next edge restriction and the final kept_rounds union —
+        # and re-evaluated per consumer without a cut. One shared RDD =
+        # one evaluation. Below the small-frontier threshold the probes
+        # are additionally broadcast-hinted (an RDD-backed frame has no
+        # size statistics, so the planner would otherwise fall back to
+        # a shuffled join for a probe side we have just proven is
+        # node-sized).
+        keep = (
+            _hint(cur_edges, w, "src")
+            .groupBy("src")
+            .agg(F.count(F.lit(1)).alias("d"))
+            .where(F.col("d") >= k)
+            .select(F.col("src").alias("node"))
+            .localCheckpoint(eager=False)
+        )
+        keep_parts.append(keep)
+        probe = F.broadcast(keep) if w else keep
+        cur_edges = (
+            cur_edges.join(probe, F.col("src") == F.col("node"), "left_semi")
+            .join(probe, F.col("dst") == F.col("node"), "left_semi")
+            .localCheckpoint(eager=False)
+        )
 
-        from functools import reduce
+    from functools import reduce
 
-        core_deg = cur_edges.groupBy("src").agg(
-            F.count(F.lit(1)).cast("long").alias("core_deg")
+    core_deg = _hint(cur_edges, w, "src").groupBy("src").agg(
+        F.count(F.lit(1)).cast("long").alias("core_deg")
+    )
+    kept_rounds = (
+        _hint(reduce(lambda a, b: a.unionByName(b), keep_parts), w, "node")
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("m"))
+    )
+    out = (
+        nodes.join(kept_rounds, "node", "left")
+        .select("node", F.coalesce("m", F.lit(0)).alias("m"))
+        .join(core_deg, F.col("node") == F.col("src"), "left")
+        .select(
+            "node",
+            F.when(F.col("m") == max_rounds, F.lit(0))
+            .otherwise(F.col("m") + 1)
+            .cast("long")
+            .alias("peel_round"),
+            F.coalesce("core_deg", F.lit(0)).alias("core_deg"),
         )
-        kept_rounds = (
-            reduce(lambda a, b: a.unionByName(b), keep_parts)
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("m"))
-        )
-        out = (
-            nodes.join(kept_rounds, "node", "left")
-            .select("node", F.coalesce("m", F.lit(0)).alias("m"))
-            .join(core_deg, F.col("node") == F.col("src"), "left")
-            .select(
-                "node",
-                F.when(F.col("m") == max_rounds, F.lit(0))
-                .otherwise(F.col("m") + 1)
-                .cast("long")
-                .alias("peel_round"),
-                F.coalesce("core_deg", F.lit(0)).alias("core_deg"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        n_unconverged = out.where(
-            (F.col("peel_round") == 0) & (F.col("core_deg") < k)
-        ).count()
-    finally:
-        if small_frontier:
-            conf.set("spark.sql.shuffle.partitions", prev_parts)
+        .localCheckpoint(eager=True)
+    )
+    n_unconverged = out.where(
+        (F.col("peel_round") == 0) & (F.col("core_deg") < k)
+    ).count()
     if n_unconverged:
         raise RuntimeError(
             f"kcore_peel: no fixpoint in {max_rounds} rounds "
@@ -760,12 +753,12 @@ def label_propagation(
     round's labels to one computation (both uses per round — the vote
     join and the self-vote union — read the same persisted RDD).
 
-    Round width is PER-PLAN (r13, retiring this operator's session-conf
-    mutation): below ``_SMALL_FRONTIER`` edges each round is ONE
-    8-partition exchange — votes are repartitioned by ``src`` once, and
-    both the (node, label) count aggregate and the top-1 window are
-    satisfied by that partitioning (hash(src) clusters (src, label)) —
-    instead of the 4 session-width exchanges of the unhinted shape.
+    Round width is PER-PLAN (:func:`_frontier_width`): below
+    ``_SMALL_FRONTIER`` edges each round is ONE 8-partition exchange —
+    votes are hash-partitioned by ``src`` once, and both the (node,
+    label) count aggregate and the top-1 window are satisfied by that
+    partitioning (hash(src) clusters (src, label)) — instead of the 4
+    session-width exchanges of the unhinted shape.
     Below ``_LPA_BROADCAST_EDGES`` the vote join additionally
     broadcasts the node-sized label frame (an RDD-backed plan has no
     size statistics, so the planner would shuffle both sides
@@ -789,19 +782,15 @@ def label_propagation(
         .localCheckpoint(eager=True)
     )
     n_edges = sym.count()
-    small_frontier = n_edges <= _SMALL_FRONTIER
+    w = _frontier_width(n_edges)
     bcast_labels = n_edges <= _LPA_BROADCAST_EDGES
-
-    def _width(df: DataFrame, *cols: str) -> DataFrame:
-        return df.repartition(8, *cols) if small_frontier else df
-
     labels = (
-        _width(sym.select(F.col("src").alias("node")), "node")
+        _hint(sym.select(F.col("src").alias("node")), w, "node")
         .distinct()
         .select("node", F.col("node").alias("label"))
         .localCheckpoint(eager=False)
     )
-    w = Window.partitionBy("src").orderBy(
+    top = Window.partitionBy("src").orderBy(
         F.col("cnt").desc(), F.col("label")
     )
     for r in range(rounds):
@@ -811,11 +800,11 @@ def label_propagation(
             .select("src", "label")
             .unionByName(labels.select(F.col("node").alias("src"), "label"))
         )
-        counts = _width(votes, "src").groupBy("src", "label").agg(
+        counts = _hint(votes, w, "src").groupBy("src", "label").agg(
             F.count(F.lit(1)).alias("cnt")
         )
         labels = (
-            counts.withColumn("rn", F.row_number().over(w))
+            counts.withColumn("rn", F.row_number().over(top))
             .where(F.col("rn") == 1)
             .select(F.col("src").alias("node"), "label")
             # last round eager: the ONE action that materializes

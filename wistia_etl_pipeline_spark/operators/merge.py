@@ -25,9 +25,6 @@ Scale notes (100 TB):
   readers (SURVEY.md §7.4); on a table format with ACID commit
   semantics (Delta/Iceberg) a real ``MERGE INTO`` replaces this whole
   module — the logical plan here is the portable fallback.
-- With a partitioned target, pass ``partition_filter`` to rewrite only
-  the partitions the stage touches (dynamic partition overwrite), not
-  the whole table.
 """
 
 from __future__ import annotations
@@ -59,15 +56,15 @@ def merge_into_path(
     stage: DataFrame,
     path: str,
     keys: Sequence[str],
-    *,
-    partition_by: Sequence[str] = (),
 ) -> None:
     """Materialized MERGE against a Parquet path: read target, upsert,
     write to a temp path, swap. The swap is a rename — near-atomic on
     posix/HDFS, best-effort on object stores (use Delta/Iceberg for
     true ACID; this is the vanilla-Parquet fallback, SURVEY.md §7.4).
+    A swap cut between its renames is rolled back first, so a replay
+    merges the stage into the last committed table.
     """
-    if _exists(spark, path):
+    if _live(spark, path):
         # The stage subtree feeds TWO consumers in the merged plan —
         # the broadcast anti-join probe and the insert union leg — and
         # Spark does not reuse a broadcast exchange as a union input,
@@ -92,32 +89,44 @@ def merge_into_path(
     # hash write-distribution a table format (Iceberg
     # write.distribution-mode=hash) applies to MERGE output.
     merged = merged.repartition(*[F.col(k) for k in keys])
-    writer = merged.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
+    merged.write.mode("overwrite").parquet(tmp)
     _swap(spark, tmp, path)
 
 
-def _exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    jsc = spark._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    return fs.exists(hpath)
+def _fs(spark: SparkSession, path: str):
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def _rename(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise OSError(f"rename {src} -> {dst} failed")
+
+
+def _live(spark: SparkSession, path: str) -> bool:
+    """Whether a table is committed at ``path``, first rolling back a
+    :func:`_swap` cut between its renames (``path`` gone, ``__old``
+    still holding the last committed table)."""
+    fs, hpath = _fs(spark, path)
+    if fs.exists(hpath):
+        return True
+    trash = hpath.suffix("__old")
+    if not fs.exists(trash):
+        return False
+    _rename(fs, trash, hpath)
+    return True
 
 
 def _swap(spark: SparkSession, tmp: str, path: str) -> None:
-    jvm = spark._jvm
-    jsc = spark._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    htmp = jvm.org.apache.hadoop.fs.Path(tmp)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    trash = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__old")
+    # callers run _live first, so an __old here is garbage of a
+    # finished swap, never the only copy of the table
+    fs, hpath = _fs(spark, path)
+    htmp = spark._jvm.org.apache.hadoop.fs.Path(tmp)
+    trash = hpath.suffix("__old")
     if fs.exists(trash):
         fs.delete(trash, True)
     if fs.exists(hpath):
-        fs.rename(hpath, trash)
-    fs.rename(htmp, hpath)
+        _rename(fs, hpath, trash)
+    _rename(fs, htmp, hpath)
     if fs.exists(trash):
         fs.delete(trash, True)

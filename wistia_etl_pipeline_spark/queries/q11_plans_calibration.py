@@ -1847,10 +1847,10 @@ def dedup_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The three closures are independent iterative jobs whose per-round
     # actions are fixed-cost-bound at any SF; run them concurrently so
     # each one's stragglers back-fill the others' idle slots (guide
-    # §2.6). Safe on one session since r13's connected_components is
-    # per-plan-width hinted (no session-conf mutation anywhere in the
-    # closure path); results are deterministic per τ and reassembled in
-    # the fixed (50, 80, 95) order.
+    # §2.6). Safe on one session: graph widths are per-plan hints, and
+    # the one session-width writer (session.scoped_shuffle_partitions)
+    # holds a lock that refuses concurrent entry. Results are
+    # reassembled in the fixed (50, 80, 95) order.
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target

@@ -59,7 +59,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..session import load_table, scoped_shuffle_partitions
+from ..session import (
+    load_table,
+    scoped_shuffle_partitions,
+    stream_state_partitions,
+)
 from ._base import query
 
 # ---------------------------------------------------------------------------
@@ -1015,6 +1019,11 @@ def chained_windowed_aggregation(
     micro.repartition(4).write.parquet(src)
     schema = spark.read.parquet(src).schema
     max_ts = micro.agg(F.max("ts")).collect()[0][0]
+    # TWO stateful operators pay per-partition store maintenance each
+    # trigger: state partitions sized to state volume, derived ONCE
+    # from run 1's input — run 2 resumes run 1's checkpoint, whose
+    # state partition count run 1's start already pinned.
+    width = stream_state_partitions(spark, src)
 
     def run_once() -> None:
         stream = (
@@ -1032,12 +1041,7 @@ def chained_windowed_aggregation(
             F.max("n").alias("max_daily"),
             F.sum("n").alias("total_events"),
         )
-        # TWO stateful operators pay per-partition store maintenance
-        # each trigger for calendar-grain state — state partitions
-        # sized to state volume (session.scoped_shuffle_partitions,
-        # shared streaming-family rule). Both runs resume the same
-        # checkpoint; the scope pins an identical width for both.
-        with scoped_shuffle_partitions(spark, source=src):
+        with scoped_shuffle_partitions(spark, width):
             q = (
                 weekly.select(
                     "event_type",

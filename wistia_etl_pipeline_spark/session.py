@@ -17,7 +17,13 @@ instead make the scale-relevant settings explicit so the same code runs on
 from __future__ import annotations
 
 import os
+import tempfile
+import threading
+import zipfile
+from contextlib import contextmanager
 
+from py4j.protocol import Py4JError
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 #: Runtime-settable SQL confs applied to *any* session handed to the engine
@@ -74,15 +80,16 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
-            pass  # non-settable on this build/runtime — keep going
+        except AnalysisException:  # not modifiable on this runtime
+            if key == "spark.sql.session.timeZone":
+                raise  # UTC is an invariant, not best-effort
     _ship_package(spark)
     return spark
 
 
 #: State-partition count for the engine's bounded-state streaming
-#: demonstrations (env-overridable for cluster sizing). The r9
-#: ``statestore_join_state_audit`` lesson, generalized in r12: every
+#: demonstrations. The r9 ``statestore_join_state_audit`` lesson,
+#: generalized in r12: every
 #: micro-batch pays state-store maintenance on EVERY shuffle partition
 #: of every stateful operator whether or not it holds data (a
 #: stream-stream join keeps 4 stores per partition per side — at 32
@@ -92,16 +99,12 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
 #: watermark-horizon join buffers, 64-register sketches), so a small
 #: state-partition count is the honest production sizing too — the
 #: knob scales with state volume, not compute parallelism.
-STREAM_SHUFFLE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "8")
-)
+STREAM_SHUFFLE_PARTITIONS = 8
 
 #: Source-bytes-per-state-partition target for the data-adaptive
 #: derivation below (r13, the VERDICT r12 item): 1 GiB of staged stream
 #: input per state partition.
-STREAM_STATE_BYTES_PER_PARTITION = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_BYTES_PER_PARTITION", str(1 << 30))
-)
+STREAM_STATE_BYTES_PER_PARTITION = 1 << 30
 
 #: Upper clamp for the derived width — bounds the per-trigger
 #: state-store commit fan-out on a real cluster the same way the floor
@@ -121,22 +124,20 @@ def stream_state_partitions(spark: SparkSession, source=None) -> int:
     most linearly, usually far slower) with the staged input — whose
     on-disk size is known from the file listing the stream source has
     already done, i.e. derivable WITHOUT running a job. One state
-    partition per ``STREAM_STATE_BYTES_PER_PARTITION`` (1 GiB default)
-    of input, clamped to [``STREAM_SHUFFLE_PARTITIONS``, 2048]: at the
+    partition per ``STREAM_STATE_BYTES_PER_PARTITION`` (1 GiB) of
+    input, clamped to [``STREAM_SHUFFLE_PARTITIONS``, 2048]: at the
     bench SFs (MB-scale sources) this floors to the r12-measured 8 —
     bit-identical bench behavior — while a 100 TB backfill derives a
-    cluster-scale width instead of serializing on 8 stores. The env
-    var stays the operator override for deployments that know their
-    key cardinality (it short-circuits the derivation entirely).
+    cluster-scale width instead of serializing on 8 stores.
 
     ``source``: a batch DataFrame over the staged input, a parquet
     path, or a list of paths (stream-stream joins pass both sides).
-    ``None`` keeps the static default.
+    ``None`` keeps the floor, and so does a source without size
+    statistics (an RDD-backed plan reports ``defaultSizeInBytes``).
     """
-    if os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"):
-        return STREAM_SHUFFLE_PARTITIONS
     if source is None:
         return STREAM_SHUFFLE_PARTITIONS
+    unknown = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
     paths = source if isinstance(source, (list, tuple)) else [source]
     size = 0
     for p in paths:
@@ -144,39 +145,46 @@ def stream_state_partitions(spark: SparkSession, source=None) -> int:
         # leaf-relation plan statistics = total file bytes (listing
         # already cached by the schema read every call site does); no
         # job, no scan
-        size += int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        n = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        if n >= unknown:
+            return STREAM_SHUFFLE_PARTITIONS
+        size += n
     derived = -(-size // STREAM_STATE_BYTES_PER_PARTITION)  # ceil
     return max(
         STREAM_SHUFFLE_PARTITIONS, min(_STREAM_STATE_MAX_PARTITIONS, derived)
     )
 
 
-class scoped_shuffle_partitions:
-    """Context manager: set ``spark.sql.shuffle.partitions`` for the
-    duration of a block and restore it on exit (both paths). Safe under
-    the engine's documented sequential-per-session invariant — the same
-    try/finally discipline as ``kcore_peel`` and the state-store
-    audits. Every action that should run at the scoped width must
-    execute INSIDE the block (lazy frames materialized later see the
-    restored session value).
+_SHUFFLE_SCOPE = threading.Lock()
 
-    ``source`` (r13): staged stream input (path/DataFrame/list) the
-    width is derived from via :func:`stream_state_partitions`; without
-    it the static ``STREAM_SHUFFLE_PARTITIONS`` default applies."""
 
-    def __init__(self, spark: SparkSession, n: int | None = None, *, source=None):
-        self._spark = spark
-        self._n = stream_state_partitions(spark, source) if n is None else n
-        self._prev: str | None = None
+@contextmanager
+def scoped_shuffle_partitions(
+    spark: SparkSession, n: int | None = None, *, source=None
+):
+    """Set ``spark.sql.shuffle.partitions`` for a block and restore it
+    on exit — the only writer of that conf after :func:`get_spark`
+    (a stream's first start pins its state partition count from it;
+    batch plans take per-plan hints instead). The conf is
+    session-global, so entering while another thread is inside raises
+    ``RuntimeError``. Actions meant to run at the scoped width must
+    execute INSIDE the block.
 
-    def __enter__(self):
-        self._prev = self._spark.conf.get("spark.sql.shuffle.partitions")
-        self._spark.conf.set("spark.sql.shuffle.partitions", str(self._n))
-        return self
-
-    def __exit__(self, *exc):
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._prev)
-        return False
+    ``n`` defaults to :func:`stream_state_partitions` over ``source``
+    (staged stream input: path/DataFrame/list)."""
+    if n is None:
+        n = stream_state_partitions(spark, source)
+    if not _SHUFFLE_SCOPE.acquire(blocking=False):
+        raise RuntimeError("scoped_shuffle_partitions: active on another thread")
+    try:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    finally:
+        _SHUFFLE_SCOPE.release()
 
 
 _SHIPPED: set[int] = set()
@@ -190,9 +198,6 @@ def _ship_package(spark: SparkSession) -> None:
     if key in _SHIPPED:
         return
     try:
-        import tempfile
-        import zipfile
-
         pkg_dir = os.path.dirname(os.path.abspath(__file__))
         zip_path = os.path.join(
             tempfile.gettempdir(), f"wistia_etl_pipeline_spark_{os.getpid()}.zip"
@@ -207,7 +212,7 @@ def _ship_package(spark: SparkSession) -> None:
                             zf.write(full, rel)
         spark.sparkContext.addPyFile(zip_path)
         _SHIPPED.add(key)
-    except Exception:
+    except (OSError, Py4JError):
         pass  # best-effort; plain-JVM queries don't need it
 
 
@@ -223,7 +228,6 @@ def get_spark(
     is strictly better than a low one.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    import tempfile
 
     builder = (
         SparkSession.builder.appName(app_name)

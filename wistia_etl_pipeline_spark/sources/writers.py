@@ -99,7 +99,6 @@ def compact_parquet(
     path: str,
     *,
     target_file_mb: int = 128,
-    partition_by: Sequence[str] = (),
 ) -> int:
     """Small-file compaction for incrementally-MERGEd parquet paths.
 
@@ -111,20 +110,15 @@ def compact_parquet(
     readers never observe a partial table. Returns the output file
     count. Run it on a cadence, not per-batch — it rewrites the table.
     """
-    from ..operators.merge import _swap
+    from ..operators.merge import _fs, _live, _swap
 
+    _live(spark, path)
     df = spark.read.parquet(path)
-    jsc = spark._jsc
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
+    fs, hpath = _fs(spark, path)
     size = fs.getContentSummary(hpath).getLength()
     n_files = max(1, int(size // (target_file_mb * 1024 * 1024)) + 1)
     tmp = path.rstrip("/") + "__tmp_compact"
-    writer = df.repartition(n_files).write.mode("overwrite")
-    if partition_by:
-        writer = df.repartition(n_files, *partition_by).write.mode("overwrite").partitionBy(*partition_by)
-    writer.parquet(tmp)
+    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
     _swap(spark, tmp, path)
     return n_files
 
