@@ -237,7 +237,8 @@ def main() -> None:
     # r4 #7) cannot silently lapse when queries are added.
     bench_names = list(HEADLINE) + [n for n in qs if n not in set(HEADLINE)]
 
-    # warm-up: JVM/JIT/codegen + parquet footer caches
+    # warm-up: JVM/JIT/codegen (table schemas are declared, so there
+    # is no footer schema to cache)
     qs["gold_daily_rollup"](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
@@ -301,6 +302,10 @@ def main() -> None:
             "value_cold": round(sum(cold.values()), 3),
             "sf": sf,
             "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+            # what the session actually ran at: getOrCreate may return
+            # a session whose master ignores SPARK_GRAFT_CPUS
+            "effective_parallelism": spark.sparkContext.defaultParallelism,
+            "master": spark.sparkContext.master,
             "runs_per_query": n_runs,
             "cold_runs_per_query": n_cold if cold else 0,
         }

@@ -1,11 +1,10 @@
-"""Deterministic fake REST transport — the test/demo double for S3.
+"""Deterministic fake REST transport — the test double for S3.
 
-The reference can only be exercised against the live Wistia API; our
+The reference can only be exercised against the live Wistia API; the
 engine instead treats the transport as an injection point, and this
-module provides the deterministic implementation used by unit tests
-and local demos. Living in the package (not in tests/) keeps it
-importable on executor Python workers, which deserialize distributed
-fetch closures by module reference.
+module provides the deterministic implementation the unit tests use.
+Executor Python workers cannot import ``tests/``, so the module
+registers itself to be pickled by value (see the end of the file).
 
 URL contract: ``...?page=N&...`` — rows for page N of a fixed integer
 sequence 0..total_rows-1.
@@ -14,9 +13,12 @@ sequence 0..total_rows-1.
 from __future__ import annotations
 
 import json
+import sys
 from dataclasses import dataclass
 
-from .rest_source import Transport, TransportError
+from pyspark import cloudpickle
+
+from wistia_etl_pipeline_spark.sources.rest_source import Transport, TransportError
 
 
 @dataclass(frozen=True)
@@ -60,10 +62,14 @@ def make_factory(
     fail_substring: str | None = None,
 ):
     """A picklable transport factory for
-    :func:`~..sources.rest_source.fetch_media_pages_distributed`."""
+    :func:`~wistia_etl_pipeline_spark.sources.rest_source.fetch_media_pages_distributed`."""
     transport = PagedFakeTransport(total_rows, per_page, envelope, fail_substring)
 
     def factory() -> Transport:
         return transport
 
     return factory
+
+
+# distributed fetch closures reach executors, which cannot import tests/
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

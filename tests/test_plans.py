@@ -132,7 +132,7 @@ def test_sorted_write_enables_row_group_skipping(spark, sf_dir, tmp_path):
     from wistia_etl_pipeline_spark.session import load_table
     from wistia_etl_pipeline_spark.sources.writers import write_sorted_parquet
 
-    events = load_table(spark, sf_dir, "events", raw=True).select("ts", "value")
+    events = load_table(spark, sf_dir, "events").select("ts", "value")
     sorted_path = str(tmp_path / "sorted")
     unsorted_path = str(tmp_path / "unsorted")
     # tiny block size → several row groups even at test scale
@@ -210,7 +210,7 @@ def test_zorder_write_tightens_both_columns(spark, sf_dir, tmp_path):
         write_zorder_parquet,
     )
 
-    events = load_table(spark, sf_dir, "events", raw=True).select("ts", "value")
+    events = load_table(spark, sf_dir, "events").select("ts", "value")
     zpath, spath = str(tmp_path / "z"), str(tmp_path / "s")
     opts = {"parquet.block.size": str(32 * 1024)}
     write_zorder_parquet(events, zpath, cluster_cols=["ts", "value"],
@@ -661,7 +661,7 @@ def test_dpp_prunes_fact_partitions(spark):
     assert kv.get("numPartitions") == 5, kv
 
 
-def test_aqe_converts_smj_to_broadcast_at_runtime(spark):
+def test_aqe_converts_smj_to_broadcast_at_runtime(spark, sf_dir):
     """The third member of the runtime-replanning trio (skew split,
     bloom/DPP runtime filters, and THIS — join-strategy conversion):
     an aggregate derived from a big fact has no trustworthy static
@@ -673,14 +673,16 @@ def test_aqe_converts_smj_to_broadcast_at_runtime(spark):
     where compile-time estimates of derived frames can't be trusted,
     while the ADAPTIVE threshold keeps the default 10MB so only
     MEASURED post-shuffle sizes may trigger a broadcast."""
+    import os
+
     from pyspark.sql import functions as F
 
-    from wistia_etl_pipeline_spark.session import apply_runtime_confs
+    from wistia_etl_pipeline_spark.session import apply_runtime_confs, load_table
 
-    apply_runtime_confs(spark)
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    events = load_table(spark, sf01, "events")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "10MB")
-    events = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
     # derived dim: post-shuffle size is a few KB, static estimate isn't
     purchasers = (
         events.where(F.col("event_type") == "purchase")

@@ -112,7 +112,7 @@ def test_pull_terminates_on_time_budget():
 
 
 def test_distributed_fanout(spark):
-    from wistia_etl_pipeline_spark.sources.mock_transport import make_factory
+    from mock_transport import make_factory
 
     out = fetch_media_pages_distributed(
         spark,
@@ -132,7 +132,7 @@ def test_distributed_fanout(spark):
 
 
 def test_distributed_fanout_isolates_errors(spark):
-    from wistia_etl_pipeline_spark.sources.mock_transport import make_factory
+    from mock_transport import make_factory
 
     out = fetch_media_pages_distributed(
         spark, ["good", "bad"],

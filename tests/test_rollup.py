@@ -115,3 +115,38 @@ def test_incremental_agg_order_independent(spark):
     }
     assert fold(batches) == single
     assert fold(list(reversed(batches))) == single
+
+
+def test_rounding_matches_duckdb_on_ties_and_random_doubles(spark):
+    """``ndigits`` rounds x·10ⁿ as a double, the way DuckDB's
+    ``round(x, n)`` does — not the shortest decimal string of x. The
+    first value is the mean that split the two engines: x·10⁶ is
+    64014062.49999999, so 64.014062, where string rounding gives
+    64.014063."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+
+    rng = np.random.default_rng(208)
+    xs = [64.0140625, 0.0000005, 1.0000005, -2.0000025, 0.1234565, 1e-7]
+    xs += list(np.round(rng.uniform(-100.0, 100.0, 200), 7))  # decimal ties
+    xs += list(rng.uniform(-1e4, 1e4, 200))
+    xs = [float(x) for x in xs]
+    rows = [(str(i), _ts(1), x, "v") for i, x in enumerate(xs)]
+    events = spark.createDataFrame(
+        rows, "k string, ts timestamp, x double, v string"
+    )
+    out = daily_rollup(
+        events,
+        key="k",
+        event_time="ts",
+        engagement_value="x",
+        visitor="v",
+        played=F.lit(True),
+        ndigits=6,
+    ).collect()
+    got = {int(r.media_id): r.engagement for r in out}
+    t = pa.table({"i": list(range(len(xs))), "x": xs})  # noqa: F841 (duckdb scan)
+    want = dict(duckdb.sql("SELECT i, round(x, 6) FROM t").fetchall())
+    assert got == want
+    assert got[0] == 64.014062

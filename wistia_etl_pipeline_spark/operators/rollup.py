@@ -67,7 +67,14 @@ def daily_rollup(
     visitor = F.col(visitor) if isinstance(visitor, str) else visitor
 
     def _round(c: Column) -> Column:
-        return F.round(c, ndigits) if ndigits is not None else c
+        # round x·10ⁿ as a double, then scale back — DuckDB's rounding.
+        # Spark's round(x, n) rounds the shortest decimal string of x
+        # half-up instead, so a mean of exactly 64.0140625 would give
+        # 64.014063 where x·10⁶ = 64014062.49999999 gives 64.014062.
+        if ndigits is None:
+            return c
+        scale = 10.0**ndigits
+        return F.round(c * scale) / scale
 
     def _sum(c: Column) -> Column:
         if exact:

@@ -42,7 +42,12 @@ from .operators.dedup import dedup_exact
 from .operators.flatten import conform_dim_media, flatten_events
 from .operators.merge import merge_into_path
 from .operators.rollup import media_daily_agg
-from .schemas import RAW_EVENT_SCHEMA, RAW_METADATA_SCHEMA
+from .schemas import (
+    DIM_MEDIA_SCHEMA,
+    FACT_EVENTS_SCHEMA,
+    RAW_EVENT_SCHEMA,
+    RAW_METADATA_SCHEMA,
+)
 from .session import arrow_local_df
 from .sources.rest_source import PullConfig, Transport, fetch_pages
 
@@ -288,11 +293,14 @@ class BatchPipeline:
         merge_into_path(spark, dim_delta, self.dim_path, ["media_id"])
 
         # gold rollup over the touched media only (EP3, A1-A6), merged
-        # on the composite key (media_id, dt)
-        silver = spark.read.parquet(self.silver_path).filter(
-            F.col("media_id").isin(media_ids)
+        # on the composite key (media_id, dt); silver and dim are read
+        # with the schemas flatten/conform write (no inference job)
+        silver = (
+            spark.read.schema(FACT_EVENTS_SCHEMA)
+            .parquet(self.silver_path)
+            .filter(F.col("media_id").isin(media_ids))
         )
-        dim = spark.read.parquet(self.dim_path)
+        dim = spark.read.schema(DIM_MEDIA_SCHEMA).parquet(self.dim_path)
         gold_delta = media_daily_agg(silver, dim, exact=self.gold_exact)
         merge_into_path(spark, gold_delta, self.gold_path, ["media_id", "dt"])
 

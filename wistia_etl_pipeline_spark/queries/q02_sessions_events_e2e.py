@@ -418,9 +418,7 @@ def top_orders_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).join(customer, orders.o_custkey == customer.c_custkey)
     agg = joined.groupBy(
         F.col("l_orderkey").alias("orderkey"),
-        # o_orderdate arrives TIMESTAMP_NTZ (micros parquet) — cast to
-        # TimestampType (UTC session) before unix_micros
-        F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("orderdate_us"),
+        F.unix_micros("o_orderdate").alias("orderdate_us"),
         F.col("o_orderpriority").alias("orderpriority"),
     ).agg(
         F.round(

@@ -251,7 +251,7 @@ def streaming_gold_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(root, "src")
     events = load_table(spark, sf_dir, "events")
     events.repartition(8).write.parquet(src)
-    schema = spark.read.parquet(src).schema
+    schema = events.schema
 
     stream = (
         spark.readStream.schema(schema)
@@ -923,7 +923,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.staging import stage_time_ordered
 
     stage_time_ordered(staged, "ts", src, cuts)
-    schema = spark.read.parquet(src).schema
+    schema = staged.schema
 
     stream = (
         spark.readStream.schema(schema)
@@ -1635,7 +1635,7 @@ def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.staging import stage_time_ordered
 
     stage_time_ordered(events.unionByName(events), "ts", src, cuts)
-    schema = spark.read.parquet(src).schema
+    schema = events.schema
 
     stream = (
         spark.readStream.schema(schema)

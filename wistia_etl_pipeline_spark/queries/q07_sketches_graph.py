@@ -930,13 +930,13 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     v_path = stage_time_ordered(views, "vts", os.path.join(root, "views"), cuts)
     p_path = stage_time_ordered(purch, "pts", os.path.join(root, "purchases"), cuts)
     v_stream = (
-        spark.readStream.schema(spark.read.parquet(v_path).schema)
+        spark.readStream.schema(views.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(v_path)
         .withWatermark("vts", "30 minutes")
     )
     p_stream = (
-        spark.readStream.schema(spark.read.parquet(p_path).schema)
+        spark.readStream.schema(purch.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(p_path)
         .withWatermark("pts", "30 minutes")

@@ -2834,7 +2834,7 @@ def streaming_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cuts = ["2024-01-08", "2024-01-15", "2024-01-22", "2100-01-01"]
     stage_time_ordered(events, "ts", src, cuts)
-    schema = spark.read.parquet(src).schema
+    schema = events.schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

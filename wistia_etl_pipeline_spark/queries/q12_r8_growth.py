@@ -1142,8 +1142,9 @@ def streaming_hll_sketch_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull()
     )
-    events.select("user_id").repartition(8).write.parquet(src)
-    schema = spark.read.parquet(src).schema
+    users = events.select("user_id")
+    users.repartition(8).write.parquet(src)
+    schema = users.schema
 
     def regs_of(df: DataFrame) -> DataFrame:
         h = F.conv(

@@ -403,8 +403,9 @@ def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(root, "src")
     ckpt = os.path.join(root, "ckpt")
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-    ev.select("event_type", "value").repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
+    staged = ev.select("event_type", "value")
+    staged.repartition(4).write.parquet(src)
+    schema = staged.schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "2")
@@ -799,13 +800,13 @@ def statestore_join_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     views.repartition(2).write.parquet(vp)
     purch.repartition(2).write.parquet(pp)
     v_stream = (
-        spark.readStream.schema(spark.read.parquet(vp).schema)
+        spark.readStream.schema(views.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(vp)
         .withWatermark("vts", "3650 days")
     )
     p_stream = (
-        spark.readStream.schema(spark.read.parquet(pp).schema)
+        spark.readStream.schema(purch.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(pp)
         .withWatermark("pts", "3650 days")

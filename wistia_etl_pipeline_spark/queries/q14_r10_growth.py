@@ -269,11 +269,12 @@ def foreachbatch_replay_exactly_once(
     sink = os.path.join(root, "sink")
     ck = os.path.join(root, "ck")
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-    ev.select(
+    staged = ev.select(
         "event_type",
         F.expr("CAST(floor(value * 1000000) AS BIGINT)").alias("m"),
-    ).repartition(3).write.parquet(src)
-    schema = spark.read.parquet(src).schema
+    )
+    staged.repartition(3).write.parquet(src)
+    schema = staged.schema
 
     seen: list[int] = []
 
@@ -547,7 +548,7 @@ def statestore_change_feed_audit(
         micro.where(F.col("event_id") % 4 == i).coalesce(1).write.mode(
             "append"
         ).parquet(src)
-    schema = spark.read.parquet(src).schema
+    schema = micro.schema
     # State partitions sized to the ~5-key state, not compute width
     # (session.scoped_shuffle_partitions, shared streaming-family
     # rule); the statestore/changelog readers take numPartitions from
@@ -649,8 +650,9 @@ def rocksdb_statestore_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(root, "src")
     ckpt = os.path.join(root, "ck")
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-    ev.select("event_type", "value").repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
+    staged = ev.select("event_type", "value")
+    staged.repartition(4).write.parquet(src)
+    schema = staged.schema
 
     prov_key = "spark.sql.streaming.stateStore.providerClass"
     log_key = (
@@ -1017,7 +1019,7 @@ def chained_windowed_aggregation(
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     micro = ev.select("event_type", "ts")
     micro.repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
+    schema = micro.schema
     max_ts = micro.agg(F.max("ts")).collect()[0][0]
     # TWO stateful operators pay per-partition store maintenance each
     # trigger: state partitions sized to state volume, derived ONCE

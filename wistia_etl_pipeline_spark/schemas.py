@@ -12,6 +12,11 @@ Reference DDL parity (docstrings cite reference file:line):
 - ``DIM_MEDIA_SCHEMA``    ← wistia_redshift_schemas.py:28-38
 - ``MEDIA_DAILY_AGG_SCHEMA`` ← wistia_redshift_schemas.py:43-52
 - ``WATERMARK_SCHEMA``    ← bronze watermark doc, wistia_pull_wistia_api.py:48-77
+
+``TESTDATA_SCHEMAS`` is the table catalog (the reference's Glue Catalog
+role): ``session.load_table`` reads each testdata table with its
+declared DDL and checks it against the parquet footer instead of
+inferring it.
 """
 
 from __future__ import annotations
@@ -142,3 +147,38 @@ WATERMARK_SCHEMA = T.StructType(
         T.StructField("last_received_at", T.StringType()),
     ]
 )
+
+
+# --------------------------------------------------------------------------
+# Testdata catalog — one DDL line per table, exactly the footer types
+# (TESTDATA.md). Timestamps are micros, read as session-local TIMESTAMP.
+# --------------------------------------------------------------------------
+
+TESTDATA_SCHEMAS: dict[str, str] = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+        "c_mktsegment STRING"
+    ),
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, "
+        "p_size INT, p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+        "o_totalprice DOUBLE, o_orderdate TIMESTAMP, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, "
+        "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, "
+        "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP"
+    ),
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, "
+        "value DOUBLE, props STRING"
+    ),
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}

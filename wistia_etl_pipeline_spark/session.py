@@ -24,23 +24,15 @@ from contextlib import contextmanager
 
 from py4j.protocol import Py4JError
 from pyspark.errors import AnalysisException
-from pyspark.sql import SparkSession
+from pyspark.sql import SparkSession, types as T
+
+from .schemas import TESTDATA_SCHEMAS
 
 #: Runtime-settable SQL confs applied to *any* session handed to the engine
 #: (driver-owned sessions included). Static confs (memory, master) are
 #: deliberately excluded — those belong to the cluster manager.
 RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
-    # The driver's testdata parquet stores TIMESTAMP(NANOS) which Spark's
-    # vectorized reader rejects; read as long and convert (see load_table).
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Current testdata stores TIMESTAMP(MICROS) with no timezone
-    # annotation, which Spark 4 infers as TIMESTAMP_NTZ by default. Read
-    # it as session-local TimestampType instead (UTC session ⇒ identical
-    # epoch values): timestamp predicates then push down to the parquet
-    # scan directly — a cast-to-LTZ projection would hide every ts
-    # filter from row-group pruning (the P3/P5 scale story).
-    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -141,10 +133,10 @@ def stream_state_partitions(spark: SparkSession, source=None) -> int:
     paths = source if isinstance(source, (list, tuple)) else [source]
     size = 0
     for p in paths:
-        df = spark.read.parquet(p) if isinstance(p, str) else p
-        # leaf-relation plan statistics = total file bytes (listing
-        # already cached by the schema read every call site does); no
-        # job, no scan
+        # leaf-relation plan statistics = total file bytes from the
+        # listing; an empty read schema skips footer inference, so a
+        # path costs no job and no scan
+        df = spark.read.schema(T.StructType()).parquet(p) if isinstance(p, str) else p
         n = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         if n >= unknown:
             return STREAM_SHUFFLE_PARTITIONS
@@ -250,19 +242,6 @@ def get_spark(
     return apply_runtime_confs(builder.getOrCreate())
 
 
-#: Testdata timestamp columns. Earlier driver generations stored parquet
-#: TIMESTAMP(NANOS) (surfacing as epoch-nanos longs under ``nanosAsLong``);
-#: the current generation stores TIMESTAMP(MICROS) without a timezone
-#: annotation, which Spark 4 reads as TIMESTAMP_NTZ. ``load_table``
-#: normalizes BOTH to session-local TimestampType (UTC session ⇒ the
-#: epoch value is preserved, matching DuckDB's naive micros TIMESTAMP).
-_NANOS_TIMESTAMP_COLS: dict[str, tuple[str, ...]] = {
-    "events": ("ts",),
-    "lineitem": ("l_shipdate",),
-    "orders": ("o_orderdate",),
-}
-
-
 def arrow_local_df(spark: SparkSession, rows: list[dict], schema):
     """Driver-local rows → DataFrame through ONE Arrow batch.
 
@@ -281,8 +260,6 @@ def arrow_local_df(spark: SparkSession, rows: list[dict], schema):
     extra keys are ignored, same as the ``.get`` tuple path) or tuples
     in field order; ``schema`` is a StructType or a DDL string.
     """
-    from pyspark.sql import types as T
-
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     names = [f.name for f in schema.fields]
@@ -318,37 +295,47 @@ def arrow_local_df(spark: SparkSession, rows: list[dict], schema):
     )
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str, *, raw: bool = False):
-    """Read one driver-generated parquet table (TESTDATA.md).
+def load_table(spark: SparkSession, sf_dir: str, name: str):
+    """Read one testdata parquet table (TESTDATA.md) with its declared
+    schema from :data:`schemas.TESTDATA_SCHEMAS` — no schema-inference
+    job. The declared timestamps are session-local TimestampType (UTC
+    session ⇒ the stored micros are the epoch value), so ts predicates
+    sit on the storage column and push down to the parquet scan.
 
-    A thin projection restores nanos-timestamp columns; everything else
-    stays a plain columnar scan, so Catalyst still pushes filters and
-    prunes columns at the parquet reader.
-
-    ``raw=True`` skips the timestamp conversion: predicates against a
-    CONVERTED column cannot reach the parquet scan (the conversion
-    expression hides the column from pushdown — only IsNotNull
-    survives). Scan-selective queries should filter the raw epoch-nanos
-    long first, then convert; see ``watermark_incremental_filter`` for
-    the pattern. The general scale lesson: keep pushable predicates in
-    the storage column's domain.
-    """
-    from pyspark.sql import functions as F
-
+    The declaration is first checked against the parquet footer (read
+    by pyarrow, no Spark job); any drift raises ``ValueError`` naming
+    the table, the column, and the declared and found types."""
     apply_runtime_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if raw:
-        return df
-    dtypes = dict(df.dtypes)
-    for col in _NANOS_TIMESTAMP_COLS.get(name, ()):
-        if col in df.columns and dtypes[col] == "bigint":
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
-    # Safety net only: with ``inferTimestampNTZ.enabled=false`` (see
-    # RUNTIME_CONFS) untagged micros columns already surface as LTZ and
-    # this loop is a no-op. If a session rejects that conf, normalize
-    # NTZ → session-UTC TimestampType here (value-preserving, but the
-    # cast hides ts predicates from pushdown — prefer the conf).
-    for col, dt in dtypes.items():
-        if dt == "timestamp_ntz":
-            df = df.withColumn(col, F.col(col).cast("timestamp"))
-    return df
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    declared = T.StructType.fromDDL(TESTDATA_SCHEMAS[name])
+    _check_footer(name, path, declared)
+    return spark.read.schema(declared).parquet(path)
+
+
+def _check_footer(name: str, path: str, declared) -> None:
+    """Raise ``ValueError`` unless the footer of ``path`` (a file, or a
+    Spark-written directory of part files sharing one schema) holds
+    exactly the ``declared`` columns and types. Nullability is not
+    compared. INT96 timestamps (Spark's default output) are read at
+    micros; any other non-micros timestamp is drift, because
+    ``from_arrow_schema`` maps every unit to TimestampType."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    if os.path.isdir(path):
+        path = min(glob.glob(os.path.join(path, "*.parquet")), default=path)
+    arrow = pq.ParquetFile(path, coerce_int96_timestamp_unit="us").schema_arrow
+    found = {f.name: f.dataType.simpleString() for f in from_arrow_schema(arrow)}
+    for f in arrow:
+        if pa.types.is_timestamp(f.type) and f.type.unit != "us":
+            found[f.name] = str(f.type)
+    want = {f.name: f.dataType.simpleString() for f in declared}
+    for col in dict.fromkeys([*want, *found]):
+        if want.get(col) != found.get(col):
+            raise ValueError(
+                f"{name}.{col}: declared {want.get(col, 'no column')}, "
+                f"found {found.get(col, 'no column')} in {path}"
+            )

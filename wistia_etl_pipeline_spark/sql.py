@@ -6,18 +6,16 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from .schemas import TESTDATA_SCHEMAS
 from .session import load_table
 
-ALL_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
+ALL_TABLES = tuple(TESTDATA_SCHEMAS)
 
 
 def register_tables(
     spark: SparkSession, sf_dir: str, *, tables: tuple[str, ...] = ALL_TABLES
 ) -> None:
-    """Create/replace one temp view per table (nanos-timestamp columns
-    already restored by load_table)."""
+    """Create/replace one temp view per table, each read by load_table
+    with its declared catalog schema (no inference job)."""
     for name in tables:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
